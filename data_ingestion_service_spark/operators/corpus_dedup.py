@@ -311,6 +311,13 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", e.alias("v"))
         .collect()
     }
+    missing = [v for v in (0, *_PQ_SEEDS) if v not in seed_rows]
+    if missing:
+        raise ValueError(
+            f"q_knn_pq: embeddings has no row for vec_id {missing} "
+            "(vec_id 0 is the probe row, "
+            f"{list(_PQ_SEEDS)} seed the codebook)"
+        )
     cent_mat = np.array([seed_rows[seed] for seed in _PQ_SEEDS])  # K x 64
     probe_mat = np.array([seed_rows[0]])  # 1 x 64
 

@@ -22,6 +22,26 @@ import weakref
 
 from pyspark.sql import SparkSession
 
+
+def graft_cpus() -> int:
+    """The harness core count, ``SPARK_GRAFT_CPUS`` (default 32).
+
+    Raises ``ValueError`` naming the variable when it is not a positive
+    integer: it becomes both the ``local[N]`` master and the default
+    shuffle-partition count, and Spark would otherwise take ``'*'`` or
+    reject ``'0'`` far from its source."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return n
+
+
 # Confs that are safe (and necessary) to set on a live session.
 RUNTIME_CONFS: dict[str, str] = {
     # Legacy fixture vintages store events.ts as TIMESTAMP(NANOS); Spark's
@@ -47,8 +67,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # submitter, and AQE coalescing absorbs the difference either way.
     # Runtime-settable, so safe on a live session.
     "spark.sql.shuffle.partitions": (
-        os.environ.get("SPARK_GRAFT_SHUFFLE")
-        or os.environ.get("SPARK_GRAFT_CPUS", "32")
+        os.environ.get("SPARK_GRAFT_SHUFFLE") or str(graft_cpus())
     ),
     # Single-file fixtures make scan parallelism = ceil(bytes / this).
     # The default 128MB leaves even the sf1 stress tier's 80MB lineitem
@@ -327,8 +346,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a tuned local session for tests and bench runs."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{graft_cpus()}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -4,7 +4,12 @@ For each key named on argv: capture `.explain("formatted")` to
 plans/r11/<key>_<tag>.txt, run the query twice (cold then warm wall via
 the bench's .collect() methodology, plus a warm noop-sink wall per guide
 §1.4), and record the Spark job count per run via setJobGroup +
-statusTracker. Prints one JSON line per key.
+statusTracker. Prints one JSON line per key; ``subprocesses`` is the
+median ``/proc/stat`` ``processes`` delta over a warm run: every process
+and thread created on the host, so run it on a quiet host (``null``
+without ``/proc``). Without libhadoop the JVM forks a Hadoop shell
+command (chmod, readlink, ...) for many local file operations, so this
+shows that floor without a thread dump.
 
 Usage:
     python scripts/profile_keys.py [--tag before|after] key [key ...]
@@ -38,6 +43,19 @@ PLANS_DIR = os.path.join(
     os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r12"),
 )
 os.makedirs(PLANS_DIR, exist_ok=True)
+
+
+def forks_so_far() -> int | None:
+    """Processes and threads created on this host since boot
+    (``/proc/stat``)."""
+    try:
+        with open("/proc/stat") as fh:
+            for line in fh:
+                if line.startswith("processes "):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
 
 
 def main() -> None:
@@ -80,17 +98,23 @@ def main() -> None:
 
         # --- warm runs (bench methodology: median-of-3 collect walls) ---
         walls = []
+        forks = []
         warm_jobs = 0
         for i in range(3):
             group = f"prof_warm{i}_{key}"
             sc.setJobGroup(group, key)
+            p0 = forks_so_far()
             t0 = time.monotonic()
             fn(spark, SF_DIR).collect()
             walls.append(time.monotonic() - t0)
+            p1 = forks_so_far()
+            if p0 is not None and p1 is not None:
+                forks.append(p1 - p0)
             time.sleep(0.1)
             warm_jobs = max(warm_jobs, len(tracker.getJobIdsForGroup(group)))
         walls.sort()
         warm = round(walls[1], 4)
+        subprocesses = sorted(forks)[1] if len(forks) == 3 else None
 
         # --- warm noop-sink wall (guide §1.4) ---
         t0 = time.monotonic()
@@ -101,6 +125,7 @@ def main() -> None:
             "key": key, "tag": TAG, "cold_sec": cold, "warm_med_sec": warm,
             "noop_sec": noop, "cold_jobs": cold_jobs, "warm_jobs": warm_jobs,
             "exchanges": n_exchange, "python_nodes": n_python,
+            "subprocesses": subprocesses,
         }), flush=True)
     try:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -270,6 +270,22 @@ def test_hot_shingle_cap_inactive(spark, sf_dir):
     )
 
 
+def test_knn_pq_names_missing_probe_row(spark, sf_dir, tmp_path):
+    """q_knn_pq scores every vector against probe row vec_id=0; an
+    embeddings table without it fails with a ValueError naming the row,
+    not a bare KeyError from the codebook collect."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    pq.write_table(
+        emb.filter(pc.not_equal(emb["vec_id"], 0)),
+        tmp_path / "embeddings.parquet",
+    )
+    with pytest.raises(ValueError, match=r"q_knn_pq.*vec_id \[0\].*probe"):
+        QUERIES["q_knn_pq"](spark, str(tmp_path))
+
+
 def test_embed_block_prune_lossless(spark, tmp_path):
     """On clustered embeddings (every real corpus) the centroid+radius
     triangle-inequality prune must drop block pairs, and the pruned

@@ -310,6 +310,23 @@ def test_stream_shuffle_sized_to_replay_input(spark, sf_dir):
     )
 
 
+@pytest.mark.parametrize("raw", ["*", "0", "-2", "abc", ""])
+def test_graft_cpus_rejects_non_positive_integers(monkeypatch, raw):
+    """SPARK_GRAFT_CPUS becomes the local[N] master and the default
+    shuffle-partition count: a value that is not a positive integer
+    fails with a ValueError naming the variable, before any session is
+    built."""
+    from data_ingestion_service_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.graft_cpus()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.get_spark()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert session.graft_cpus() == 4
+
+
 def test_store_invalidation_catches_in_flight_dependent(spark):
     """ADVICE r8 (medium): a dependent whose build is IN FLIGHT when the
     base store is invalidated (edge recorded, DataFrame not yet cached)
@@ -1848,3 +1865,74 @@ def test_stream_drain_conf_isolated_from_batch(spark, sf_dir):
     assert act.isDefined() and act.get().equals(spark._jsparkSession), (
         "routed streaming key left the JVM active session on the child"
     )
+
+
+def test_drain_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """Drain-session checkpoints go through Spark's FileSystem-API
+    checkpoint manager (the FileContext default forks ~5x more Hadoop
+    shell commands per file without libhadoop); the caller's session
+    keeps Spark's default. The switch must keep the integrity check —
+    every state delta file gets its checksum sidecar — and recovery: a
+    restart on the same checkpoint resumes from the stored state without
+    re-emitting rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    child = sq.stream_session(spark)
+    assert child.conf.get(key) == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark.conf.get(key, None) is None
+    assert (
+        child.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
+        == "true"
+    )
+
+    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
+    src.mkdir()
+
+    def emit(batch, batch_id):
+        batch.write.parquet(str(out / f"batch={batch_id}"))
+
+    def drain():
+        q = (
+            child.readStream.schema("k int")
+            .parquet(str(src))
+            .groupBy("k")
+            .count()
+            .writeStream.outputMode("update")
+            .foreachBatch(emit)
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def emitted():
+        rows = child.read.parquet(str(out)).collect()
+        return sorted((r.batch, r.k, r["count"]) for r in rows)
+
+    pq.write_table(pa.table({"k": pa.array([1, 1, 2], pa.int32())}), src / "a.parquet")
+    drain()
+    assert emitted() == [(0, 1, 2), (0, 2, 1)]
+
+    deltas = list((ckpt / "state" / "0").glob("*/*.delta"))
+    assert deltas, "stateful drain wrote no state delta files"
+    for delta in deltas:
+        assert delta.with_name(f"{delta.name}.crc").is_file(), (
+            f"{delta} has no checksum sidecar"
+        )
+
+    # Restart on the same checkpoint: nothing new, nothing re-emitted;
+    # one new row for k=1 continues from the stored count.
+    drain()
+    assert emitted() == [(0, 1, 2), (0, 2, 1)]
+    pq.write_table(pa.table({"k": pa.array([1], pa.int32())}), src / "b.parquet")
+    drain()
+    assert emitted() == [(0, 1, 2), (0, 2, 1), (1, 1, 3)]
